@@ -60,6 +60,29 @@ def _wait_for_idle(limit: float, timeout_sec: float = 180.0) -> tuple[float, boo
     return load, load > limit
 
 
+def timed_execution(spark, query, sf_dir: str, name: str, job_group: str | None = None) -> float:
+    """Materialize one query through the noop sink; return its wall seconds.
+
+    With ``job_group``, the execution runs under a unique job group so the
+    status tracker can attribute every Spark job this query ran
+    (deterministic counters — VERDICT r13 item 2: the wall-clock noise
+    floor is ±16-29% on the cluster/retrieval family, so sub-20% claims
+    need a drift-free signal). The group and its description are cleared
+    even when the query raises, so no later job inherits them.
+    """
+    sc = spark.sparkContext
+    if job_group is not None:
+        sc.setJobGroup(job_group, name)
+    try:
+        t0 = time.time()
+        query(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return time.time() - t0
+    finally:
+        if job_group is not None:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -108,18 +131,7 @@ def main() -> int:
     names = sorted(qs)
 
     def run_once(name: str, job_group: str | None = None) -> float:
-        if job_group is not None:
-            # a unique job group per counted execution so the status
-            # tracker can attribute every Spark job this query ran
-            # (deterministic counters — VERDICT r13 item 2: the wall-clock
-            # noise floor is ±16-29% on the cluster/retrieval family, so
-            # sub-20% claims need a drift-free signal).
-            spark.sparkContext.setJobGroup(job_group, name)
-        t0 = time.time()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        if job_group is not None:
-            spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+        dt = timed_execution(spark, qs[name], sf_dir, name, job_group)
         # settling wrappers release their own adopted caches (caching.py),
         # but localCheckpoint blocks and any un-settled persist would
         # still linger; clearing between executions keeps sequential

@@ -7,9 +7,14 @@ map (~3.5 KB at 130 queries). The contract tested here: the line is a
 single JSON object, ``queries`` is a {name: sec} dict (driver schema),
 and the line stays under 1,800 chars even at 200 registry entries with
 long names — the registry cap the driver enforces.
+
+The last test pins that a counted execution's Spark job group never
+outlives it.
 """
 
 import json
+
+import pytest
 
 import bench
 
@@ -93,3 +98,30 @@ def test_idle_gate_threshold_flags_loaded_machine(monkeypatch):
     monkeypatch.setattr(bench.os, "getloadavg", lambda: (0.11, 0.0, 0.0))
     load, noisy = bench._wait_for_idle(0.5, timeout_sec=0.0)
     assert noisy is False and load == 0.11
+
+
+def test_counted_execution_clears_job_group_even_when_the_query_raises(spark):
+    """A counted execution's job group must not outlive it: neither the
+    group id nor its description may leak into the next query's jobs,
+    on the success path or when the query raises mid-execution."""
+    sc = spark.sparkContext
+
+    def props():
+        return (
+            sc.getLocalProperty("spark.jobGroup.id"),
+            sc.getLocalProperty("spark.job.description"),
+        )
+
+    def ok(spark, sf_dir):
+        return spark.range(10)
+
+    def boom(spark, sf_dir):
+        spark.range(10).count()  # one job runs under the group first
+        raise RuntimeError("boom")
+
+    assert bench.timed_execution(spark, ok, "", "ok", job_group="bench:ok:0") >= 0
+    assert props() == (None, None)
+    with pytest.raises(RuntimeError, match="boom"):
+        bench.timed_execution(spark, boom, "", "boom", job_group="bench:boom:0")
+    assert props() == (None, None)
+    assert sc.statusTracker().getJobIdsForGroup("bench:boom:0")

@@ -319,3 +319,66 @@ def test_ledger_survives_end_of_round_artifact(tmp_path):
     assert ledger_diff(
         {"q_old": CURRENT_ROUND - 3}, recomputed, names, CURRENT_ROUND, prev_green
     ) == {"q_old": (CURRENT_ROUND - 3, CURRENT_ROUND)}
+
+
+def test_every_query_half_and_oracle_is_registered():
+    """No unregistered code in the query catalog: every top-level ``q_*``
+    def is reachable by name from a QUERIES value (directly, or through
+    the fused query that calls it), and every ``_SQL_*`` constant from an
+    ORACLES value. A half that nothing registers is never attested and
+    never run, so it is deleted rather than kept."""
+    import ast
+
+    import udata_datalake_service_spark.entry_queries as eq
+
+    tree = ast.parse(open(eq.__file__).read())
+    refs: dict[str, set[str]] = {}
+    roots: dict[str, set[str]] = {"QUERIES": set(), "ORACLES": set()}
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef):
+            names = [node.name]
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names = [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+        else:
+            continue
+        used = {n.id for n in ast.walk(node) if isinstance(n, ast.Name)}
+        for name in names:
+            refs.setdefault(name, set()).update(used - {name})
+            if name in roots and isinstance(node.value, ast.Dict):
+                roots[name].update(
+                    n.id for v in node.value.values for n in ast.walk(v)
+                    if isinstance(n, ast.Name)
+                )
+
+    def reachable(start: set[str]) -> set[str]:
+        seen: set[str] = set()
+        stack = list(start)
+        while stack:
+            name = stack.pop()
+            if name not in seen:
+                seen.add(name)
+                stack.extend(refs.get(name, ()))
+        return seen
+
+    from_queries = reachable(roots["QUERIES"])
+    from_oracles = reachable(roots["ORACLES"])
+    assert len(roots["QUERIES"]) == len(eq.QUERIES)
+    assert len(roots["ORACLES"]) == len(eq.ORACLES)
+    orphans = sorted(n for n in refs if n.startswith("q_") and n not in from_queries)
+    orphans += sorted(n for n in refs if n.startswith("_SQL_") and n not in from_oracles)
+    assert not orphans, f"unregistered query code in entry_queries.py: {orphans}"
+
+
+def test_tx_text_metrics_refuses_diverged_stopwords(spark, sf_dir, monkeypatch):
+    """q_tx_text_metrics counts stopwords with the English language-marker
+    hits; if STOPWORDS ever stops being LANG_MARKERS['en'] it must raise
+    an explicit error (an ``assert`` would vanish under ``python -O``)."""
+    import pytest
+
+    import udata_datalake_service_spark.llm.text as text
+    from udata_datalake_service_spark.entry_queries import q_tx_text_metrics
+
+    monkeypatch.setattr(text, "STOPWORDS", text.LANG_MARKERS["en"] + ("a",))
+    with pytest.raises(RuntimeError, match="diverged"):
+        q_tx_text_metrics(spark, sf_dir)

@@ -1273,6 +1273,9 @@ def test_dsir_log_weights_direction(spark):
     assert out[4]["log_weight"] > out[3]["log_weight"]
     assert out[4]["log_weight"] > out[5]["log_weight"]
     assert out[4]["log_weight"] > 0 > out[3]["log_weight"]
+    # the feature count does not depend on the hash-bucket count
+    default = {r["doc_id"]: r["n_feats"] for r in dsir_log_weights(df, F.col("tgt")).collect()}
+    assert default[1] == 7 and default[6] == 0
 
 
 def test_standardize_embeddings_zscores(spark):
@@ -1560,6 +1563,10 @@ def test_curriculum_buckets_laws(spark):
     for r in got.values():
         assert r["score_min"] - 1e-9 <= r["score_mean"] <= r["score_max"] + 1e-9
         assert r["n_tokens"] > 0
+
+    # a single document: one non-empty bucket, nothing dropped
+    one = curriculum_buckets(df.filter(F.col("doc_id") == 7), "q", n_buckets=2).collect()
+    assert len(one) == 1 and one[0]["n_docs"] == 1
 
     with pytest.raises(ValueError, match="n_buckets"):
         curriculum_buckets(df, "q", n_buckets=1)

@@ -107,10 +107,12 @@ def test_deterministic_sample_avoids_global_sort(spark):
 
 def test_group_topk_partial_aggregates_before_shuffle(spark):
     # the registry entry is the folded both-variants union; the per-operator
-    # shape contract lives on the plain builder
-    from udata_datalake_service_spark.entry_queries import q_a1_group_topk
+    # shape contract lives on one plain top_k_groups leg
+    from udata_datalake_service_spark.operators.core import top_k_groups
+    from udata_datalake_service_spark.session import read_table
 
-    plan = formatted_plan(q_a1_group_topk(spark, SF_DIR))
+    ev = read_table(spark, SF_DIR, "events")
+    plan = formatted_plan(top_k_groups(ev, "event_type", k=20))
     # map-side combine: two HashAggregates around one Exchange
     assert tree(plan).count("HashAggregate") == 2
     assert "TakeOrderedAndProject" in plan
@@ -120,9 +122,13 @@ def test_group_topk_partial_aggregates_before_shuffle(spark):
 def test_profile_is_single_scan(spark):
     """One aggregate pass for all columns: exactly one parquet scan even
     with N exact count_distincts (Expand, not N scans)."""
-    from udata_datalake_service_spark.entry_queries import q_a9_profile_numeric
+    from udata_datalake_service_spark.operators.profile import profile_df
+    from udata_datalake_service_spark.session import read_table
 
-    plan = formatted_plan(q_a9_profile_numeric(spark, SF_DIR))
+    li = read_table(spark, SF_DIR, "lineitem")
+    plan = formatted_plan(
+        profile_df(li, ["l_quantity", "l_extendedprice", "l_discount", "l_tax"])
+    )
     assert tree(plan).count("Scan parquet") == 1
     assert "Expand" in plan
 

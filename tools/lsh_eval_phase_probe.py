@@ -3,7 +3,7 @@
 
 dd_lsh_eval composes five phases; this probe times each SEPARATELY at
 ×64 and ×256 of the sf0.1 documents table (same token-salted
-output-linear fixture as scale256_probe.py), with upstream results
+output-linear fixture as SCALE64.md §SCALE256), with upstream results
 persisted so a phase's time never includes recomputing its inputs:
 
   1. signatures  minhash_signatures(d, 8, 2)          scan-shaped

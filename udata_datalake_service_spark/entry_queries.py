@@ -36,8 +36,6 @@ from udata_datalake_service_spark.llm.dedup import (
     near_dup_clusters,
     ngram_jaccard_pairs,
     simhash_map,
-    simhash_table,
-    word_shingles,
 )
 from udata_datalake_service_spark.llm.multimodal import (
     extract_image_features,
@@ -45,20 +43,12 @@ from udata_datalake_service_spark.llm.multimodal import (
     frame_sample_plan,
 )
 from udata_datalake_service_spark.llm.similarity import (
-    _as_double,
     brute_force_topk,
-    dot,
     ivf_topk,
     lsh_bucketed_topk,
-    norm,
 )
 from udata_datalake_service_spark.llm.text import (
     LANG_MARKERS,
-    detect_language,
-    fingerprint,
-    punct_ratio,
-    quality_score,
-    stopword_ratio,
     token_count,
     tokens,
 )
@@ -336,23 +326,10 @@ SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM (
 """
 
 
-def q_a1_group_topk(spark, sf_dir):
-    """A1 — `/api/checks/aggregate` group-by-expression top-k."""
-    ev = _t(spark, sf_dir, "events")
-    return top_k_groups(ev, "event_type", k=20)
-
-
 _SQL_A1 = """
 SELECT event_type AS value, COUNT(*) AS count FROM events
 GROUP BY event_type ORDER BY count DESC, value ASC LIMIT 20
 """
-
-
-def q_a1_group_topk_json(spark, sf_dir):
-    """A1 (json variant) — group by a JSON *expression*, the reference's
-    headers->>'content-type' aggregate (db/check.py:87-98)."""
-    ev = _t(spark, sf_dir, "events")
-    return top_k_groups(ev, F.get_json_object("props", "$.k"), k=20)
 
 
 _SQL_A1J = """
@@ -461,13 +438,6 @@ def q_a7_count_over_all(spark, sf_dir):
 
 
 _SQL_A7 = "SELECT n_nationkey, n_name, COUNT(*) OVER () AS total FROM nation"
-
-
-def q_a9_profile_numeric(spark, sf_dir):
-    """A9 — per-column profiling in one pass per column (csv_detective
-    profile replacement)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return profile_df(li, ["l_quantity", "l_extendedprice", "l_discount", "l_tax"])
 
 
 _SQL_A9 = " UNION ALL ".join(
@@ -653,35 +623,6 @@ SELECT event_id,
   CASE WHEN v1 <> 'NO_GUESS' THEN v1 WHEN v2 <> 'NO_GUESS' THEN v2 ELSE 'NO_GUESS' END AS change_status,
   CASE WHEN v1 <> 'NO_GUESS' THEN 'payload' WHEN v2 <> 'NO_GUESS' THEN 'value' ELSE NULL END AS change_method
 FROM v
-"""
-
-
-def q_f_scalar_surface(spark, sf_dir):
-    """F1/F8/F9/F11 — scalar surface showcase: md5 naming, domain
-    extraction, content-type split, tri-state HTTP validity."""
-    ev = _t(spark, sf_dir, "events")
-    url = F.concat(F.lit("https://"), F.col("event_type"), F.lit(".example.org/p?x=1"))
-    ct = F.concat(F.col("event_type"), F.lit("; charset=utf-8"))
-    status = (F.lit(200) + F.col("event_id") % 300).cast("int")
-    return ev.select(
-        "event_id",
-        F.md5("event_type").alias("et_md5"),
-        domain_of(url).alias("domain"),
-        split_content_type(ct).alias("content_type"),
-        status.cast("long").alias("status"),
-        is_valid_status(status).alias("is_valid"),
-    )
-
-
-_SQL_FSC = f"""
-SELECT event_id, md5(event_type) AS et_md5,
-  regexp_extract('https://' || event_type || '.example.org/p?x=1', '{DOMAIN_REGEX}', 1) AS domain,
-  trim(string_split(event_type || '; charset=utf-8', ';')[1]) AS content_type,
-  200 + event_id % 300 AS status,
-  CASE WHEN 200 + event_id % 300 = 429 THEN NULL
-       WHEN 200 + event_id % 300 >= 200 AND 200 + event_id % 300 < 400 THEN TRUE
-       ELSE FALSE END AS is_valid
-FROM events
 """
 
 
@@ -1164,65 +1105,6 @@ FROM events
 """
 
 
-def q_f_scalar_surface2(spark, sf_dir):
-    """F12/F13 — UUID validation (routes/resources.py:19,37) and ISO-8601
-    offset parsing with UTC coercion (cli.py:112-115)."""
-    ev = _t(spark, sf_dir, "events")
-    h = F.md5(F.col("event_id").cast("string"))
-    uuid = F.concat_ws(
-        "-",
-        F.substring(h, 1, 8), F.substring(h, 9, 4), F.substring(h, 13, 4),
-        F.substring(h, 17, 4), F.substring(h, 21, 12),
-    )
-    # corrupt every 3rd id so the validator has negatives
-    uuid = F.when(F.col("event_id") % 3 == 0, F.regexp_replace(uuid, "-", "_")).otherwise(uuid)
-    is_valid = uuid.rlike("^[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}$")
-    iso = F.concat(F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss"), F.lit("+02:00"))
-    reparsed = F.to_timestamp(iso, "yyyy-MM-dd'T'HH:mm:ssXXX")
-    return ev.select(
-        "event_id",
-        uuid.alias("uuid"),
-        is_valid.alias("uuid_valid"),
-        F.unix_micros(reparsed).alias("utc_us"),
-    )
-
-
-_SQL_FSC2 = """
-WITH x AS (
-  SELECT event_id, ts, md5(CAST(event_id AS VARCHAR)) AS h FROM events
-), u AS (
-  SELECT event_id, ts,
-    substr(h,1,8) || '-' || substr(h,9,4) || '-' || substr(h,13,4) || '-' ||
-    substr(h,17,4) || '-' || substr(h,21,12) AS uuid0
-  FROM x
-)
-SELECT event_id,
-  CASE WHEN event_id % 3 = 0 THEN replace(uuid0, '-', '_') ELSE uuid0 END AS uuid,
-  regexp_matches(
-    CASE WHEN event_id % 3 = 0 THEN replace(uuid0, '-', '_') ELSE uuid0 END,
-    '^[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}$') AS uuid_valid,
-  epoch_us(CAST(strftime(ts, '%Y-%m-%dT%H:%M:%S') || '+02:00' AS TIMESTAMPTZ)) AS utc_us
-FROM u
-"""
-
-
-def q_a9_profile_tops(spark, sf_dir):
-    """A9 (tops) — csv_detective's per-column top-values block: top-10
-    (value, count) per profiled column, emitted long-form. Each column's
-    tops is one groupBy + TakeOrderedAndProject over the aggregated frame."""
-    ev = _t(spark, sf_dir, "events")
-    pieces = []
-    for name in ("event_type", "user_id"):
-        pieces.append(
-            ev.groupBy(F.col(name).cast("string").alias("value"))
-            .agg(F.count(F.lit(1)).alias("count"))
-            .orderBy(F.desc("count"), F.asc_nulls_last("value"))
-            .limit(10)
-            .withColumn("column", F.lit(name))
-        )
-    return union_tiers(*pieces)
-
-
 _SQL_A9T = """
 (SELECT CAST(event_type AS VARCHAR) AS value, COUNT(*) AS count, 'event_type' AS column
  FROM events GROUP BY event_type ORDER BY count DESC, value ASC LIMIT 10)
@@ -1230,15 +1112,6 @@ UNION ALL
 (SELECT CAST(user_id AS VARCHAR), COUNT(*), 'user_id'
  FROM events GROUP BY user_id ORDER BY COUNT(*) DESC, CAST(user_id AS VARCHAR) ASC LIMIT 10)
 """
-
-
-def q_dd_ngram_jaccard_maxdf(spark, sf_dir):
-    """n-gram Jaccard with stop-shingle dropping (max_df=100) — the skew
-    control that makes the inverted-index join survive hot shingles at
-    scale; Jaccard is computed on the filtered shingle space on BOTH sides
-    (sizes too), exactly as the oracle replays it."""
-    d = _tw(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(d, k=2, threshold=0.35, max_df=100)
 
 
 _SQL_DD_NGRAM_MAXDF = f"""
@@ -1631,18 +1504,6 @@ SELECT md5('https://data.example.org/drop.csv'), NULL, FALSE, NULL
 # =========================================================================
 # Text / LLM plane
 # =========================================================================
-def q_tx_stats(spark, sf_dir):
-    """Text quality block: token count, punctuation/stopword ratios,
-    composite quality score."""
-    d = _tw(spark, sf_dir, "documents")
-    c = F.col("text")
-    return d.select(
-        "doc_id",
-        token_count(c).cast("long").alias("n_tokens"),
-        F.round(punct_ratio(c), 4).alias("punct_ratio"),
-        F.round(stopword_ratio(c), 4).alias("stopword_ratio"),
-        quality_score(c).alias("quality"),
-    )
 
 
 _SQL_TX_STATS = f"""
@@ -1669,15 +1530,6 @@ FROM y
 """
 
 
-def q_tx_langid(spark, sf_dir):
-    """Language ID: argmax over per-language marker-token hits."""
-    d = _tw(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id", F.col("lang").alias("lang_declared"),
-        detect_language(F.col("text")).alias("lang_detected"),
-    )
-
-
 def _sql_lang_hits(lang: str) -> str:
     markers = ", ".join(f"'{m}'" for m in LANG_MARKERS[lang])
     return f"len(list_filter(t, x -> x IN ({markers})))"
@@ -1698,35 +1550,6 @@ SELECT doc_id, lang AS lang_declared,
        WHEN h_es = GREATEST(h_de, h_en, h_es, h_fr) THEN 'es'
        ELSE 'fr' END AS lang_detected
 FROM h
-"""
-
-
-def q_tx_fingerprint(spark, sf_dir):
-    """Canonical content fingerprint (normalized-token md5)."""
-    d = _tw(spark, sf_dir, "documents")
-    return d.select("doc_id", fingerprint(F.col("text")).alias("fp"))
-
-
-_SQL_TX_FP = f"SELECT doc_id, md5(array_to_string({_SQL_TOKS}, ' ')) AS fp FROM documents"
-
-
-def q_tx_rolling_fingerprint(spark, sf_dir):
-    """Karp-Rabin polynomial fingerprint (ordered fold over token hashes)
-    — the rolling-hash fingerprint next to the stream-md5 one."""
-    from udata_datalake_service_spark.llm.text import rolling_fingerprint
-
-    d = _tw(spark, sf_dir, "documents")
-    return d.select("doc_id", rolling_fingerprint(F.col("text")).alias("rfp"))
-
-
-_SQL_TX_RFP = f"""
-SELECT doc_id,
-  list_reduce(
-    list_prepend(0::BIGINT,
-      list_transform({_SQL_TOKS},
-        t -> (('0x' || substr(md5(t), 1, 8))::UBIGINT)::BIGINT)),
-    (acc, x) -> (acc * 257 + x) % 2147483647) AS rfp
-FROM documents
 """
 
 
@@ -2453,12 +2276,6 @@ SELECT id AS doc_id, MIN(label) AS cluster_id FROM cc GROUP BY id
 """
 
 
-def q_dd_ngram_jaccard(spark, sf_dir):
-    """Exact n-gram Jaccard near-dup pairs via shingle inverted index."""
-    d = _tw(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(d, k=2, threshold=0.35)
-
-
 _SQL_DD_NGRAM = f"""
 WITH x AS (SELECT doc_id, {_SQL_TOKS} AS t FROM documents),
 sh AS (SELECT doc_id AS id, unnest({_sql_shingles(2)}) AS s FROM x),
@@ -2530,14 +2347,6 @@ def q_dd_simhash(spark, sf_dir):
     simhash_map≡simhash_table≡simhash64 equivalence tests."""
     d = _tw(spark, sf_dir, "documents")
     return simhash_map(d).select(F.col("id").alias("doc_id"), "simhash")
-
-
-def q_ann_topk_bruteforce(spark, sf_dir):
-    """Exact cosine top-10 for query vectors vec_id < 5 (broadcast cross
-    join + per-query window top-k)."""
-    e = _tw(spark, sf_dir, "embeddings")
-    res = brute_force_topk(e, e.filter(F.col("vec_id") < 5), k=10, dim=64)
-    return res.withColumnRenamed("rank", "rnk")
 
 
 _SQL_ANN_TOPK = """
@@ -2712,16 +2521,6 @@ FROM documents d LEFT JOIN p ON d.doc_id = p.id
 """
 
 
-def q_ann_topk_lsh(spark, sf_dir):
-    """Approximate (sign-LSH bucketed) top-k — the 100 TB candidate path.
-    Deterministic (splitmix64-derived hyperplanes), so its DuckDB oracle
-    replays the same bucketing with the plane literals embedded; the
-    brute-force query above is the recall ground truth."""
-    e = _tw(spark, sf_dir, "embeddings")
-    res = lsh_bucketed_topk(e, e.filter(F.col("vec_id") < 5), k=10)
-    return res.withColumnRenamed("rank", "rnk")
-
-
 def q_k9_webhook_payload(spark, sf_dir):
     """K9 — the webhook's ``check:*`` document as a typed row projection
     (crawl/preprocess_check_data.py:36-55): availability tri-state, status,
@@ -2778,79 +2577,6 @@ _SQL_MM_FRAMES = """
 SELECT doc_id AS media_id, unnest(range(0, CAST(n_chars % 60 AS BIGINT) + 1, 5)) AS frame_ts
 FROM documents
 """
-
-
-def q_ann_topk_ivf(spark, sf_dir):
-    """IVF-style approximate top-k (data-dependent inverted lists).
-    Deterministic (first-N centroids, stable tie-breaks), so its DuckDB
-    oracle replays the same assignment/probing; recall ground truth =
-    ann_topk_bruteforce."""
-    e = _tw(spark, sf_dir, "embeddings")
-    res = ivf_topk(e, e.filter(F.col("vec_id") < 5), k=10, num_lists=16, num_probes=4)
-    return res.withColumnRenamed("rank", "rnk")
-
-
-def q_mm_image_meta(spark, sf_dir):
-    """Multimodal plumbing: binary content → mapInPandas feature extraction
-    (stub decode kernel, deterministic) — the Arrow batch path itself is
-    what's being verified against the SQL replay of the stub math."""
-    # plain read: the stub decode is trivial per row, so a wide fan-out only
-    # multiplies python-worker cold starts; real scans split on their own
-    d = _t(spark, sf_dir, "documents")
-    media = fake_media_from_documents(d)
-    feats = extract_image_features(media)
-    return feats.select(
-        "media_id",
-        F.col("width").cast("long").alias("width"),
-        F.col("height").cast("long").alias("height"),
-        "n_bytes",
-    )
-
-
-_SQL_MM = """
-SELECT doc_id AS media_id,
-  64 + (strlen(text) % 512) AS width,
-  64 + ((strlen(text) // 7) % 512) AS height,
-  strlen(text) AS n_bytes
-FROM documents
-"""
-
-
-def q_mm_audio_meta(spark, sf_dir):
-    """Audio decode/resample plumbing: mapInPandas stub kernel treating the
-    payload as 16-bit PCM mono resampled to 16 kHz — integer-exact byte
-    arithmetic the oracle replays (float rounding would diverge across
-    engines; durations are integer milliseconds)."""
-    from udata_datalake_service_spark.llm.multimodal import extract_audio_features
-
-    d = _t(spark, sf_dir, "documents")
-    media = fake_media_from_documents(d).withColumn("kind", F.lit("audio"))
-    return extract_audio_features(media, target_rate=16000)
-
-
-_SQL_MM_AUDIO = """
-SELECT doc_id AS media_id,
-  strlen(text) AS n_bytes,
-  strlen(text) // 2 AS n_samples,
-  16000 AS sample_rate,
-  (strlen(text) // 2) * 1000 // 16000 AS duration_ms,
-  'stub' AS decode_source
-FROM documents
-"""
-
-
-def q_tx_bpe_tokens(spark, sf_dir):
-    """BPE-ish token counting: GPT-2-style pre-tokenizer piece count next
-    to the whitespace-word count (LLM-pipeline token budgeting). The same
-    RE2-portable pattern runs on both engines (llm/text.BPE_SPLIT_RE)."""
-    from udata_datalake_service_spark.llm.text import bpe_token_count, token_count
-
-    d = _tw(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        token_count(F.col("text")).alias("n_words"),
-        bpe_token_count(F.col("text")).alias("n_bpe_pieces"),
-    )
 
 
 def _sql_tx_bpe() -> str:
@@ -3072,16 +2798,17 @@ def q_tx_text_metrics(spark, sf_dir):
     # from the staged integers with the identical expression shapes.
     # __h_en doubles as the STOPWORD hit count — valid only while
     # STOPWORDS ≡ LANG_MARKERS["en"] (llm/text.py defines it that way);
-    # the assert turns a future divergence of either constant into a
+    # the guard turns a future divergence of either constant into a
     # loud error instead of a silently drifted stopword_ratio/quality
     # (VERDICT r13 "What's wrong" item 3).
     from udata_datalake_service_spark.llm.text import STOPWORDS
 
-    assert STOPWORDS == LANG_MARKERS["en"], (
-        "q_tx_text_metrics reuses __h_en as the stopword hit count; "
-        "STOPWORDS and LANG_MARKERS['en'] have diverged — stage a "
-        "separate stopword count here"
-    )
+    if STOPWORDS != LANG_MARKERS["en"]:
+        raise RuntimeError(
+            "q_tx_text_metrics reuses __h_en as the stopword hit count; "
+            "STOPWORDS and LANG_MARKERS['en'] have diverged — stage a "
+            "separate stopword count here"
+        )
     praw = F.when(
         F.col("__len") > 0, F.col("__npunct").cast("double") / F.col("__len")
     ).otherwise(F.lit(0.0))

@@ -1,9 +1,8 @@
 """URL scalar helpers (F9, SURVEY §2.9).
 
 ``domain_of`` — crawl/check_resources.py:73-74 uses urlparse(url).netloc.
-``F.parse_url(col, 'HOST')`` is the codegen'd equivalent; a regexp variant
-is provided because the DuckDB oracle lacks parse_url and regexp semantics
-are identical across engines.
+It is a regexp rather than ``F.parse_url(col, 'HOST')`` because the DuckDB
+oracle lacks parse_url and regexp semantics are identical across engines.
 """
 
 from __future__ import annotations
@@ -17,16 +16,12 @@ DOMAIN_REGEX = r"^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#@]*@)?([^/?#:]+)"
 SCHEME_REGEX = r"^[a-zA-Z][a-zA-Z0-9+.-]*://"
 
 
-def domain_of(url_col: Column, portable: bool = True) -> Column:
-    """Hostname of a URL (userinfo and port excluded). ``portable=True``
-    uses a regexp reproducible in ANSI SQL / DuckDB; otherwise the native
-    ``parse_url`` (same result, marginally cheaper). Both forms return
-    NULL for a string with no ``scheme://`` authority."""
-    if portable:
-        ext = F.regexp_extract(url_col, DOMAIN_REGEX, 1)
-        return F.when(ext != "", ext)  # '' on no-match → NULL, as parse_url
-    # try_: under ANSI mode plain parse_url RAISES on malformed input
-    return F.try_parse_url(url_col, F.lit("HOST"))
+def domain_of(url_col: Column) -> Column:
+    """Hostname of a URL (userinfo and port excluded), by a regexp
+    reproducible in ANSI SQL / DuckDB. NULL for a string with no
+    ``scheme://`` authority, as ``parse_url`` returns."""
+    ext = F.regexp_extract(url_col, DOMAIN_REGEX, 1)
+    return F.when(ext != "", ext)  # '' on no-match → NULL, as parse_url
 
 
 # tracking params dropped during canonicalization (the industry-standard

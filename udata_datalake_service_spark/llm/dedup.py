@@ -100,8 +100,9 @@ def shingles_of_tokens(toks: Column, k: int = 3) -> Column:
     referenced inside the lambda is re-evaluated PER ELEMENT — with an
     inline tokens() the full-document regex split ran once per shingle
     window (~176× per doc on natural text). Measured on 5 000 zipf docs
-    (tools/minhash_family_probe.py): the whole 8-hash MinHash job went
-    67 s → 8.9 s from this one projection. An attribute reference is
+    (SOAK.md, round-13 cont.; COVERAGE.md "per-window token re-split
+    fixed"): the whole 8-hash MinHash job went 67.4 s → 5.4 s from this
+    one projection. An attribute reference is
     per-element cheap; the slice-copy that remains is the irreducible
     window cost."""
     n = F.size(toks)

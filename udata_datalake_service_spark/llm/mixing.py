@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 HASH_SPACE = float(1 << 32)
@@ -153,21 +153,6 @@ def split_assign_grouped(
     group key — near-duplicate rows inside one group can never straddle
     train/test. Same determinism/normalization contract as split_assign."""
     return split_assign(df, weights, group_cols, seed=seed, out_col=out_col)
-
-
-def split_report(
-    assigned: DataFrame, out_col: str = "split", group_cols: Sequence[str] | None = None
-) -> DataFrame:
-    """Per-split row counts (+ distinct groups when group_cols given) and
-    achieved fraction — the audit table next to the assignment."""
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    if group_cols:
-        aggs.append(
-            F.count_distinct(*[F.col(c) for c in group_cols]).alias("n_groups")
-        )
-    per = assigned.groupBy(out_col).agg(*aggs)
-    total = F.sum("n_rows").over(Window.partitionBy())
-    return per.withColumn("fraction", F.round(F.col("n_rows") / total, 6))
 
 
 def curriculum_buckets(

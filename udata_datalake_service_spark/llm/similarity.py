@@ -136,25 +136,6 @@ def _hyperplanes(dim: int, num_planes: int, seed: int = 7) -> list[list[float]]:
     return planes
 
 
-def signature_bits(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit string ('1'/'0' per plane) — one LSH bucket key, as columns.
-
-    Kept for API parity / single-table use. The bucketed operators below
-    use ``_bucket_keys_udf`` instead: building num_tables × num_planes
-    plane literals as Column trees costs seconds of driver-side analysis
-    alone (measured 3.3 s plan build for 4×8 planes × dim 64), dwarfing
-    the actual execution on any batch — one Arrow-batched matmul replaces
-    the whole tree.
-    """
-    bits = [
-        F.when(
-            dot(vec, F.array(*[F.lit(w) for w in plane])) >= 0, F.lit("1")
-        ).otherwise(F.lit("0"))
-        for plane in planes
-    ]
-    return F.concat(*bits)
-
-
 def _bucket_keys_udf(dim: int, num_planes: int, num_tables: int, seed_base: int):
     """Pandas UDF: embedding → array of ``num_tables`` integer bucket keys.
 
@@ -528,7 +509,6 @@ def label_centroids(
     label_col: str = "label",
     quantum: int = 1_000_000,
     dim: int | None = None,
-    chunk: int | None = None,
 ) -> DataFrame:
     """Per-label centroid vectors — the E-step of k-means / the class
     prototype a vector-quality or VQ pass needs.
@@ -556,62 +536,7 @@ def label_centroids(
     map-side partial agg already bounds shuffle bytes at
     labels × dim × partitions) — so 64-dim callers deliberately stay on
     the default.
-
-    ``chunk`` (r14, VERDICT item 7) is the middle form for large dims:
-    explode dim/chunk rows of ``chunk``-component structs and run ONE
-    groupBy(label, chunk_idx) with ``chunk`` integer sums, then
-    reassemble per label. chunk× fewer exploded rows than the default
-    and chunk-sized aggregate buffers instead of dim-sized — identical
-    values (same per-component round → integer sum → division; the
-    chunked branch filters NULL vectors up front so ``n_vectors``
-    matches the other forms, whose explode/count already skip them).
-    Requires ``dim % chunk == 0``.
     """
-    if dim is not None and chunk:
-        if dim % chunk:
-            raise ValueError(f"chunk {chunk} must divide dim {dim}")
-        v = _as_double(F.col(vec))
-        base = df.select(F.col(label_col).alias("label"), v.alias("__v")).filter(
-            F.col("__v").isNotNull()
-        )
-        structs = [
-            F.struct(
-                F.lit(ci).alias("ck"),
-                *[
-                    F.round(F.get(F.col("__v"), s + i) * quantum, 0)
-                    .cast("long")
-                    .alias(f"q{i}")
-                    for i in range(chunk)
-                ],
-            )
-            for ci, s in enumerate(range(0, dim, chunk))
-        ]
-        ex = base.select("label", F.explode(F.array(*structs)).alias("c")).select(
-            "label",
-            F.col("c.ck").alias("ck"),
-            *[F.col(f"c.q{i}").alias(f"q{i}") for i in range(chunk)],
-        )
-        g = ex.groupBy("label", "ck").agg(
-            *[F.sum(f"q{i}").alias(f"s{i}") for i in range(chunk)],
-            F.count(F.lit(1)).alias("n"),
-        )
-        arr = F.array(
-            *[
-                F.col(f"s{i}") / (F.col("n") * F.lit(float(quantum)))
-                for i in range(chunk)
-            ]
-        )
-        return (
-            g.select("label", "n", F.struct(F.col("ck"), arr.alias("a")).alias("p"))
-            .groupBy("label")
-            .agg(
-                F.flatten(
-                    F.transform(F.sort_array(F.collect_list("p")), lambda s: s["a"])
-                ).alias("centroid"),
-                F.max("n").alias("n_vectors"),
-            )
-            .select(F.col("label").alias(label_col), "centroid", "n_vectors")
-        )
     if dim is not None:
         v = _as_double(F.col(vec))
         base = df.select(F.col(label_col).alias("label"), v.alias("__v"))
