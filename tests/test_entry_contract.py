@@ -382,3 +382,32 @@ def test_tx_text_metrics_refuses_diverged_stopwords(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(text, "STOPWORDS", text.LANG_MARKERS["en"] + ("a",))
     with pytest.raises(RuntimeError, match="diverged"):
         q_tx_text_metrics(spark, sf_dir)
+
+
+def test_lake_schema_inference_has_one_site():
+    """Every lake read that infers a parquet schema goes through
+    ``Lake._read_parquet``, whose memo skips the inference job while a
+    table's file set is unchanged. A second ``option("mergeSchema"`` in
+    the package would be a read that bypasses the memo."""
+    import ast
+    import re
+    from pathlib import Path
+
+    import udata_datalake_service_spark as pkg
+    from udata_datalake_service_spark.sinks import lake
+
+    site = re.compile(r"""option\(\s*["']mergeSchema["']""")
+    hits = [
+        (p, src[: m.start()].count("\n") + 1)
+        for p in sorted(Path(pkg.__file__).parent.rglob("*.py"))
+        for src in [p.read_text()]
+        for m in site.finditer(src)
+    ]
+    assert len(hits) == 1, hits
+    path, line = hits[0]
+    assert path == Path(lake.__file__)
+    fn = next(
+        n for n in ast.walk(ast.parse(path.read_text()))
+        if isinstance(n, ast.FunctionDef) and n.name == "_read_parquet"
+    )
+    assert fn.lineno <= line <= fn.end_lineno

@@ -206,3 +206,45 @@ def test_inspect_hostile_inputs_never_crash_untyped(spark, tmp_path):
     p = tmp_path / "garbage.csv"
     p.write_bytes(bytes(range(256)) * 3)
     inspect_csv(spark, str(p))
+
+
+_DIALECTS = {
+    "semicolon.csv": "id;montant\n1;1 020,20\n2;35,5\n3;\n".encode(),
+    "comma.csv": b"a,b\n1,x\n2,y\n",
+    "tab.csv": b"a\tb\n1\tx\n2\ty\n4\tz\n",
+    "pipe.csv": b"a|b\n1|x\n",
+    "latin1.csv": "nom;ville\ncafé;Besançon\nnoël;Orléans\n".encode("latin-1"),
+    "bom.csv": b"\xef\xbb\xbfid;v\n7;x\n8;y\n",
+    "quoted_multiline.csv": b'id,note\n1,"two\nlines"\n2,plain\n',
+    "header_offset.csv": b"exported by tool v3\n\nname,amount\nalice,10\nbob,20\n",
+    "header_only.csv": b"alpha;beta\n",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_DIALECTS) + ["gzipped.csv.gz"])
+def test_total_lines_is_the_row_count(spark, tmp_path, name):
+    """``total_lines`` comes from the vote aggregate, not a second scan;
+    it must equal the all-strings frame's own count on every dialect."""
+    import gzip
+
+    from udata_datalake_service_spark.sources.csv_reader import read_csv_with_dialect
+
+    p = tmp_path / name
+    if name.endswith(".gz"):
+        p.write_bytes(gzip.compress(_DIALECTS["semicolon.csv"]))
+    else:
+        p.write_bytes(_DIALECTS[name])
+    _, insp = inspect_csv(spark, str(p))
+    raw = read_csv_with_dialect(
+        spark,
+        str(p),
+        separator=insp.separator,
+        encoding=insp.encoding,
+        header_row_idx=insp.header_row_idx,
+        all_strings=True,
+    )
+    assert insp.total_lines == raw.count()
+    if name == "header_offset.csv":
+        assert insp.header_row_idx == 2 and insp.total_lines == 2
+    if name == "header_only.csv":
+        assert insp.total_lines == 0

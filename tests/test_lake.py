@@ -1705,3 +1705,98 @@ def test_recover_log_table_after_sweep_crash(spark, tmp_path, proto_store):
     assert lake.append_log_table_exactly_once(
         spark.createDataFrame([(99,)], "id long"), "t", "ep-strag"
     ) is False
+
+
+# ------------------------------------------------ schema resolution memo ----
+def _with_job_count(spark, fn):
+    """(fn(), the number of Spark jobs it started), counted through a
+    StatusTracker job group cleared on the way out."""
+    sc = spark.sparkContext
+    group = f"test-jobs-{_uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("partition_by", [None, ["check_date"]])
+def test_repeated_read_of_unchanged_table_runs_no_job(spark, tmp_path, partition_by):
+    import datetime as dt
+
+    root = str(tmp_path / "lake")
+    lake = Lake(spark, root)
+    df = spark.createDataFrame(
+        [(1, "a", dt.date(2024, 1, 1)), (2, None, dt.date(2024, 1, 2)),
+         (3, "c", dt.date(2024, 1, 2))],
+        "id long, v string, check_date date",
+    )
+    lake.write_app_table(df, "checks", partition_by=partition_by)
+    _, first = _with_job_count(spark, lambda: lake.read_app_table("checks"))
+    again, n = _with_job_count(spark, lambda: lake.read_app_table("checks"))
+    assert first >= 1 and n == 0
+    fresh = Lake(spark, root).read_app_table("checks")
+    assert again.schema == fresh.schema
+    assert sorted(again.collect()) == sorted(fresh.collect())
+
+
+def test_widening_append_after_memoized_read_shows_new_column(spark, tmp_path):
+    """The memo is checked against the files the read itself lists, so a
+    widening append from this instance or from another `Lake` on the same
+    root is seen by the next read."""
+    root = str(tmp_path / "lake")
+    lake = Lake(spark, root)
+    lake.write_app_table(spark.createDataFrame([(1, "a")], "id long, v string"), "t")
+    lake.read_app_table("t")
+    lake.read_app_table("t")  # memoized
+    lake.append_app_table(
+        spark.createDataFrame([(2, "b", 9.5)], "id long, v string, score double"),
+        "t",
+        allow_schema_evolution=True,
+    )
+    back = lake.read_app_table("t")
+    assert set(back.columns) == {"id", "v", "score"}
+    assert {r["id"]: r["score"] for r in back.collect()} == {1: None, 2: 9.5}
+
+    Lake(spark, root).append_app_table(
+        spark.createDataFrame([(3, True)], "id long, flag boolean"),
+        "t",
+        allow_schema_evolution=True,
+    )
+    back = lake.read_app_table("t")
+    assert set(back.columns) == {"id", "v", "score", "flag"}
+    assert {r["id"]: r["flag"] for r in back.collect()} == {1: None, 2: None, 3: True}
+
+
+def test_schema_memo_holds_one_entry_per_table_and_drop_evicts(spark, tmp_path):
+    lake = Lake(spark, str(tmp_path / "lake"))
+    lake.write_app_table(spark.createDataFrame([(1, 0)], "id long, n long"), "catalog")
+    for _ in range(5):
+        cur = lake.read_app_table("catalog")
+        lake.rewrite_app_table(cur.withColumn("n", F.col("n") + 1), "catalog")
+    assert lake.read_app_table("catalog").collect()[0]["n"] == 5
+    assert list(lake._schemas) == [lake.app_table_path("catalog")]
+
+    lake.write_table(spark.createDataFrame([(1,)], "id long"), "conv")
+    lake.read_table("conv")
+    assert lake.table_path("conv") in lake._schemas
+    lake.drop_table("conv")
+    assert lake.table_path("conv") not in lake._schemas
+
+
+def test_registry_reads_with_its_declared_schema_and_runs_no_job(spark, tmp_path):
+    from udata_datalake_service_spark.schemas import TABLES_INDEX_SCHEMA
+
+    lake = Lake(spark, str(tmp_path / "lake"))
+    assert lake.registry().schema == TABLES_INDEX_SCHEMA  # empty fallback
+    lake.register("t1", {"total_lines": 2}, "r1", "https://a.org/1.csv")
+    lake.register("t2", {"total_lines": 3}, "r2", "https://a.org/2.csv", {"id": "btree"})
+    reg, n = _with_job_count(spark, lake.registry)
+    assert n == 0
+    assert reg.schema == TABLES_INDEX_SCHEMA
+    ver = lake.table_version("tables_index", app=True)
+    inferred = spark.read.parquet(f"{lake.registry_path}/{ver}")
+    assert inferred.schema == TABLES_INDEX_SCHEMA
+    assert sorted(reg.collect()) == sorted(inferred.collect())

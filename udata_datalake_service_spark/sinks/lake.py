@@ -30,6 +30,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from udata_datalake_service_spark.schemas import TABLES_INDEX_SCHEMA
 from udata_datalake_service_spark.sinks.store import PosixStore
@@ -62,7 +63,18 @@ class Lake:
     rename into place inside the lock; read-modify-writes can pass the
     `table_version` snapshot for compare-and-swap semantics (losers get
     `ConcurrentWriteError` and retry) — the optimistic-concurrency
-    protocol Delta/Iceberg implement on their commit logs."""
+    protocol Delta/Iceberg implement on their commit logs.
+
+    Schema resolution: a table's merged parquet schema is inferred (one
+    Spark job over the footers) once per committed file set, and every
+    later read of the same files is planned with it and runs no job. The
+    memo is per instance, one entry per logical table, keyed on the file
+    set Spark itself lists for the read: part files are immutable and
+    uniquely named, so an equal set has an equal schema, and any append
+    or rewrite, by this instance, another instance or another process,
+    changes the set and re-infers. It has no option, TTL or size bound
+    beyond the number of tables. The registry is read with its declared
+    ``TABLES_INDEX_SCHEMA`` and infers nothing."""
 
     def __init__(self, spark: SparkSession, root: str, store=None):
         self.spark = spark
@@ -72,6 +84,10 @@ class Lake:
         # default; S3SemanticsStore exercises the protocol against
         # object-store rename/visibility semantics (tests/test_lake.py)
         self.store = store if store is not None else PosixStore()
+        # table base path -> (frozenset(inputFiles), merged schema), the
+        # schema-resolution memo of `_read_parquet`. Entries are replaced
+        # whole, so threads sharing the instance at worst re-infer.
+        self._schemas: dict[str, tuple[frozenset, StructType]] = {}
 
     # ------------------------------------------------- versioned commits ----
     @staticmethod
@@ -359,7 +375,30 @@ class Lake:
             cols.append(subs[0].name.split("=", 1)[0])
             d = subs[0]
 
-    def _read_dir(self, base: Path, schema=None, merge_schema: bool = False) -> DataFrame:
+    def _read_parquet(self, base: Path, *paths: Path) -> DataFrame:
+        """The one schema-inferring parquet read: ``paths`` of the table
+        at ``base``, with the union schema of their footers (mergeSchema:
+        after a widening append a version holds mixed-schema files, and a
+        plain read would keep whichever single footer Spark picks). The
+        inference runs only when the file set Spark lists for this read
+        differs from the one the memo's schema was inferred from (class
+        docstring, "Schema resolution")."""
+        key = str(base)
+        locs = [str(p) for p in paths]
+        memo = self._schemas.get(key)
+        if memo is not None:
+            files, schema = memo
+            df = self.spark.read.schema(schema).parquet(*locs)
+            if frozenset(df.inputFiles()) == files:
+                return df
+        df = self.spark.read.option("mergeSchema", "true").parquet(*locs)
+        self._schemas[key] = (frozenset(df.inputFiles()), df.schema)
+        return df
+
+    def _read_dir(self, base: Path, schema: StructType | None = None) -> DataFrame:
+        """The current version of the table at ``base``. A declared
+        ``schema`` is the read schema (nothing is inferred) and the
+        empty-table fallback; without one, `_read_parquet` resolves it."""
         cur = self._current_dir(base)
         if cur is not None:
             # backends holding data server-side fetch the version prefix
@@ -371,14 +410,9 @@ class Lake:
             if schema is not None:
                 return self.spark.createDataFrame([], schema)
             raise FileNotFoundError(f"lake table has no data: {base}")
-        reader = self.spark.read
-        if merge_schema:
-            # app tables accept widening appends (allow_schema_evolution):
-            # merge footers so evolved files contribute their columns and
-            # older files read NULLs — instead of whichever single file's
-            # schema Spark happens to pick
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(str(cur))
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(str(cur))
+        return self._read_parquet(base, cur)
 
     # ---------------------------------------------------------- tables ----
     def table_path(self, name: str) -> str:
@@ -479,13 +513,14 @@ class Lake:
     def read_table_at(self, name: str, version: str) -> DataFrame:
         """Read a specific retained version (``VERSION AS OF``). Raises
         FileNotFoundError for GC'd/unknown versions."""
-        p = Path(self.table_path(name)) / version
+        base = Path(self.table_path(name))
+        p = base / version
         if not self.store.data_dir_exists(p):
             raise FileNotFoundError(
                 f"version {version!r} of {name!r} is not retained "
                 f"(history: {[h['version'] for h in self.table_history(name)]})"
             )
-        return self.spark.read.parquet(str(self.store.materialize_dir(p)))
+        return self._read_parquet(base, self.store.materialize_dir(p))
 
     def read_table_previous(self, name: str) -> DataFrame:
         """The version the last replace-write superseded."""
@@ -513,6 +548,7 @@ class Lake:
         never a registry row pointing at deleted data."""
         self._delete_registry_rows(name)
         p = Path(self.table_path(name))
+        self._schemas.pop(str(p), None)
         # existence through the backend: a fresh process has no local
         # footprint for a bucket-resident table, and a local-only check
         # would strand its keys (and MANIFEST) forever
@@ -648,7 +684,11 @@ class Lake:
             self._commit_version_locked(base, ver, staging=staging)
 
     def _check_append_schema(
-        self, df: DataFrame, cur: Path, allow_schema_evolution: bool
+        self,
+        df: DataFrame,
+        table_schema: StructType,
+        cur: Path,
+        allow_schema_evolution: bool,
     ) -> None:
         """Appends must not lose columns silently: a parquet dir whose
         files disagree on schema reads as ONE file's schema by default,
@@ -658,16 +698,11 @@ class Lake:
         ValueError otherwise. With ``allow_schema_evolution`` the
         Delta/Iceberg widening rules apply: NEW columns may be added and
         existing ones omitted (reads merge footers and yield NULLs);
-        a same-name TYPE conflict is always an error."""
-        existing = {
-            f.name: f.dataType
-            # mergeSchema: after a prior widening append the dir's files
-            # disagree; the check must compare against the UNION schema,
-            # not whichever single footer Spark happens to pick
-            for f in self.spark.read.option("mergeSchema", "true")
-            .parquet(str(cur))
-            .schema
-        }
+        a same-name TYPE conflict is always an error. ``table_schema`` is
+        the union schema of ``cur``'s files (`_read_parquet`), not
+        whichever single footer Spark would pick after a widening
+        append."""
+        existing = {f.name: f.dataType for f in table_schema}
         incoming = {f.name: f.dataType for f in df.schema}
         # partition columns are excluded from the type-equality check
         # (ADVICE r8): their read-back types come from Spark's partition
@@ -708,7 +743,9 @@ class Lake:
             self._replace_write(df, base, partition_by=partition_by)
             return
         cur = self.store.materialize_dir(cur)
-        self._check_append_schema(df, cur, allow_schema_evolution)
+        self._check_append_schema(
+            df, self._read_parquet(base, cur).schema, cur, allow_schema_evolution
+        )
         # versioned or legacy-plain: add files in place — Spark stages the
         # new files under _temporary, so a torn append is never visible
         # LOCALLY; on a remote data plane the per-object upload below has
@@ -762,7 +799,7 @@ class Lake:
         )
 
     def read_app_table(self, name: str) -> DataFrame:
-        return self._read_dir(Path(self.app_table_path(name)), merge_schema=True)
+        return self._read_dir(Path(self.app_table_path(name)))
 
     def rewrite_app_table(
         self,
@@ -933,13 +970,13 @@ class Lake:
         # retention and pruning. Partition-column TYPES re-infer through
         # Spark partition discovery, as on any partitioned read.
         pcols = self._detect_partition_cols(cur)
-        # mergeSchema: after a widening in-place append the version holds
-        # mixed-schema files — a plain read picks one arbitrary footer
-        # and the compaction would silently DROP the widened column's
-        # data (same bug class as the ADVICE-r8 exactly-once-append fix;
-        # reproduced: wide write + narrow evolved append + compact lost
-        # the wide column entirely)
-        df = self.spark.read.option("mergeSchema", "true").parquet(str(cur))
+        # the union schema (`_read_parquet`): after a widening in-place
+        # append the version holds mixed-schema files — a plain read picks
+        # one arbitrary footer and the compaction would silently DROP the
+        # widened column's data (same bug class as the ADVICE-r8
+        # exactly-once-append fix; reproduced: wide write + narrow evolved
+        # append + compact lost the wide column entirely)
+        df = self._read_parquet(base, cur)
         # carry the exactly-once ledger: compaction preserves the data, so
         # committed epoch ids must stay committed (replays keep no-opping)
         ledger = None
@@ -1003,15 +1040,17 @@ class Lake:
             ledger = _json.loads((cur / "_batches.json").read_text())
         if batch_id in ledger:
             return False
-        # mergeSchema + allowMissingColumns (ADVICE r8): after a widening
+        # union schema + allowMissingColumns (ADVICE r8): after a widening
         # append the current version holds mixed-schema files — a plain
         # read picks one arbitrary footer and the rewrite would silently
         # drop the widened column's data
         if cur is None:
             new = df
         else:
-            existing = self.spark.read.option("mergeSchema", "true").parquet(str(cur))
-            self._check_append_schema(df, cur, allow_schema_evolution=True)
+            existing = self._read_parquet(base, cur)
+            self._check_append_schema(
+                df, existing.schema, cur, allow_schema_evolution=True
+            )
             new = existing.unionByName(df, allowMissingColumns=True)
         ver = self._new_version()
         staging = base / f"_staging-{ver}"
@@ -1248,11 +1287,8 @@ class Lake:
         dirs = [d for d in dirs if d.exists()]
         if not dirs:
             # bootstrap schema: the version dir's root part files
-            roots = sorted(str(p) for p in cur.glob("*.parquet"))
-            return self.spark.read.parquet(*roots)
-        return self.spark.read.option("mergeSchema", "true").parquet(
-            *[str(d) for d in dirs]
-        )
+            return self._read_parquet(base, *sorted(cur.glob("*.parquet")))
+        return self._read_parquet(base, *dirs)
 
     def compact_log_table(self, name: str, transform=None) -> dict:
         """Fold every committed batch dir into ONE, as a new version

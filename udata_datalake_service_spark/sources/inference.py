@@ -197,6 +197,13 @@ def infer_types(df: DataFrame, columns: list[str] | None = None) -> dict[str, st
     candidate with zero failures (and at least one non-blank success) wins
     by priority order.
     """
+    return _vote(df, columns)[0]
+
+
+def _vote(df: DataFrame, columns: list[str] | None = None) -> tuple[dict[str, str], int]:
+    """`infer_types` plus the frame's row count, which the vote aggregate
+    computes anyway — the inspection's ``total_lines`` without a second
+    scan."""
     cols = columns or df.columns
     proj = []
     for c in cols:
@@ -220,7 +227,7 @@ def infer_types(df: DataFrame, columns: list[str] | None = None) -> dict[str, st
                     chosen = t
                     break
         out[c] = chosen
-    return out
+    return out, n
 
 
 def apply_types(df: DataFrame, types: dict[str, str]) -> DataFrame:
@@ -334,7 +341,7 @@ def inspect_csv(
         header_row_idx=header_row_idx,
         all_strings=True,
     )
-    types = infer_types(raw)
+    types, total_lines = _vote(raw)
     typed = apply_types(raw, types)
 
     insp = Inspection(
@@ -342,7 +349,7 @@ def inspect_csv(
         separator=separator,
         header_row_idx=header_row_idx,
         header=list(raw.columns),
-        total_lines=raw.count(),
+        total_lines=total_lines,
         columns={
             renamed(c): {
                 "python_type": types[c],
@@ -376,14 +383,14 @@ def inspect_excel(
     raw = read_excel(
         spark, path, sheet_name=sheet_name, header_row_idx=header_row_idx, fmt=fmt
     )
-    types = infer_types(raw)
+    types, total_lines = _vote(raw)
     typed = apply_types(raw, types)
     insp = Inspection(
         encoding="binary",
         separator="",
         header_row_idx=header_row_idx,
         header=list(raw.columns),
-        total_lines=raw.count(),
+        total_lines=total_lines,
         columns={
             renamed(c): {
                 "python_type": types[c],
